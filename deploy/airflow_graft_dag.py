@@ -41,13 +41,18 @@ with DAG(
             },
         )
 
-    # Incremental ingest: the engine's AvailableNow file-streaming source
-    # checkpoints consumed pages, so a daily re-run processes only new data
-    # (the Spark-native form of the reference's startAt / metadata.next
-    # resume). One job per entity, independent like the reference's DAGs.
-    ingest_issues = submit("ingest_issues", "graft.etl.IngestJob", "issues")
-    ingest_users = submit("ingest_users", "graft.etl.IngestJob", "users")
-    ingest_worklogs = submit("ingest_worklogs", "graft.etl.IngestJob", "worklogs")
+    # Daily ingest: IngestJob <entity> <pagesGlob> <tableDir> upserts the
+    # run date's landed pages ({{ ds }}, templated by Airflow) by key into
+    # the entity's parquet table, so re-running a day is idempotent. One
+    # job per entity, independent like the reference's DAGs.
+    def ingest(entity: str) -> SparkSubmitOperator:
+        return submit(f"ingest_{entity}", "graft.etl.IngestJob", entity,
+                      f"/data/pages/{entity}/{{{{ ds }}}}/*.json",
+                      f"/data/tables/{entity}")
+
+    ingest_issues = ingest("issues")
+    ingest_users = ingest("users")
+    ingest_worklogs = ingest("worklogs")
 
     # Downstream analytics refresh depends on all three tables.
     refresh = submit("refresh_marts", "graft.Verify",

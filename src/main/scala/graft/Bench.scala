@@ -53,24 +53,29 @@ object Bench {
       }
     }
     def shortKey(k: String): String = k.takeWhile(_ != '_')
+    // None when the query throws: a failure has no time, so it can never
+    // pass for a fast query on the board
     def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        name: String): Double =
-      (1 to 2).map { _ =>
+        name: String): Option[Double] =
+      try Some((1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        try {
-          if (fn(spark, sfDir).count() < 0) sys.error("negative count")
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        }
+        if (fn(spark, sfDir).count() < 0) sys.error("negative count")
         (System.nanoTime() - t0) / 1e9
-      }.min
+      }.min)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+        None
+      }
     // min of 2 runs per query: single-shot timings flagged >=3 false
     // sub-second "regressions" every round (scheduling noise on a 32-core
     // local run); the min is the reproducible cost of the plan
-    val results = SparkEntry.queries
+    val timed = SparkEntry.queries
       .filter { case (name, _) =>
         only.forall(_.exists(p => name.startsWith(p))) }
       .map { case (name, fn) => name -> timeOne(fn, name) }
+    val results = timed.collect { case (name, Some(t)) => name -> t }
+    // failed queries are listed by name and left out of every total
+    val failed = timed.collect { case (name, None) => name }.toSeq.sorted
     // SELF-ADJUDICATION (r18 directive #1): three straight rounds of
     // environmental flag churn, capped by a 43× q106 artifact a fresh JVM
     // put at 1.26 s, proved a single loaded driver run can poison the
@@ -124,8 +129,8 @@ object Bench {
       if (toRetime.isEmpty) Map.empty
       else {
         System.gc(); Thread.sleep(2000)
-        toRetime.map { name =>
-          name -> timeOne(SparkEntry.queries(name), name) }.toMap
+        toRetime.flatMap { name =>
+          timeOne(SparkEntry.queries(name), name).map(name -> _) }.toMap
       }
     // The driver keeps only the LAST 2000 chars of combined output and
     // needs the JSON line bare and COMPLETE inside that tail (sbt's final
@@ -154,13 +159,15 @@ object Bench {
     val moverNames = (movers.map(_._1) ++ hotRegressors.map(_._1))
       .map(n => "\"" + shortKey(n) + "\"").mkString("[", ",", "]")
     val premiumJson = premium.map(p => fmt(p)).getOrElse("null")
+    val failedNames = failed.map(n => "\"" + shortKey(n) + "\"")
+      .mkString("[", ",", "]")
     def line(qs: Seq[(String, Double)]): String = {
       val m = qs.flatMap { case (k, v) =>
         val sk = shortKey(k)
         ("\"" + sk + "\":" + fmt(v)) +:
           retimed.get(k).toSeq.map(r => "\"" + sk + "rt\":" + fmt(r))
       }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total)},"value_adj":${fmt(totalAdj)},"unit":"sec","premium":$premiumJson,"queries":$m,"movers":$moverNames,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"value_adj":${fmt(totalAdj)},"unit":"sec","premium":$premiumJson,"queries":$m,"movers":$moverNames,"failed":$failedNames,"sf":"$sfDir"}"""
     }
     // FULL-BOARD detail artifact (r21, VERDICT r20 #3): the 1850-char line
     // cap drops the fastest ~half of the board from the line of record, so
@@ -177,7 +184,8 @@ object Bench {
         s""""$sk":{"t":${fmt(v)},"band":$b,"rt":$r}"""
       }.mkString(",")
       val json = s"""{"premium":$premiumJson,"total":${fmt(total)},""" +
-        s""""total_adj":${fmt(totalAdj)},"sf":"$sfDir","queries":{$detail}}"""
+        s""""total_adj":${fmt(totalAdj)},"failed":$failedNames,"sf":"$sfDir",""" +
+        s""""queries":{$detail}}"""
       val p = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "bench_detail.json")
       // never let an artifact-write failure (read-only cwd, bad override
       // path) discard a completed sweep: the JSON line of record still

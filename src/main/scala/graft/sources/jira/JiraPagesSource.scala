@@ -144,15 +144,14 @@ private[graft] class FatalPageException(msg: String) extends RuntimeException(ms
   * analog of the reference's tenacity wrapper
   * (`dags/jira/jira_base_processor.py:14-17`). Only transient I/O failures
   * retry; malformed payloads fail fast. `faultInjector` is the
-  * fault-injection seam the spec uses to simulate a flaky endpoint (all
-  * executors share the JVM under local[*]); `fetchAttempts` counts
-  * attempts per path so resume semantics are assertable.
+  * fault-injection seam the spec uses to simulate a flaky endpoint and to
+  * count attempts per path (all executors share the JVM under local[*]).
+  * The fetch path itself keeps no state across calls.
   */
 private[graft] object PageTransport {
   @volatile var faultInjector: (String, Int) => Unit = (_, _) => ()
-  val fetchAttempts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
-  def resetForTest(): Unit = { faultInjector = (_, _) => (); fetchAttempts.clear() }
+  def resetForTest(): Unit = faultInjector = (_, _) => ()
 
   private def open(path: String, conf: RetryConf): java.io.InputStream = {
     val uri = new java.net.URI(path)
@@ -219,7 +218,6 @@ private[graft] object PageTransport {
     var attempt = 1
     var result: JsonNode = null
     while (result == null) {
-      fetchAttempts.merge(path, 1, (a, b) => a + b)
       try {
         faultInjector(path, attempt)
         val stream = bounded(open(path, conf), path, conf.maxPageBytes)

@@ -95,6 +95,73 @@ class JiraEtlSpec extends SparkSpec {
     assert(metrics("null_keys") === 0L)
   }
 
+  test("IngestJob observe metrics count the merged table and its null keys") {
+    import graft.etl.IngestJob
+    val root = java.nio.file.Files.createTempDirectory("graft_obs2")
+    val dir = root.resolve("issues").toString
+    IngestJob.run(spark, "issues", Seq(fixture("issues_page_1.json")), dir)
+    val keyless = root.resolve("keyless.json")
+    java.nio.file.Files.writeString(keyless,
+      """{"startAt": 0, "maxResults": 1, "total": 1,
+        | "issues": [{"key": "PROJ-9", "fields": {"summary": "no id"}}]}""".stripMargin)
+    val (table, metrics) = IngestJob.runWithMetrics(spark, "issues",
+      Seq(fixture("issues_page_2.json"), keyless.toString), dir)
+    assert(table.count() === 4)
+    assert(metrics === Map("rows" -> 4L, "null_keys" -> 1L))
+  }
+
+  test("IngestJob upserts into a file:// URI table dir like a plain path") {
+    import graft.etl.IngestJob
+    val dir = java.nio.file.Files.createTempDirectory("graft_uri")
+      .resolve("issues").toUri.toString
+    assert(dir.startsWith("file:"))
+    assert(IngestJob.run(spark, "issues",
+      Seq(fixture("issues_page_1.json")), dir).count() === 2)
+    // page 2 alone: an overwrite would leave its 1 row, the upsert keeps 3
+    assert(IngestJob.run(spark, "issues",
+      Seq(fixture("issues_page_2.json")), dir).count() === 3)
+    val day3 = IngestJob.run(spark, "issues",
+      Seq(fixture("issues_page_1.json"), fixture("issues_page_2.json")), dir)
+    assert(day3.count() === 3)
+    assert(day3.select("issue_id").distinct().count() === 3)
+  }
+
+  test("IngestJob swap leaves no staging or backup sibling behind") {
+    import graft.etl.IngestJob
+    val root = java.nio.file.Files.createTempDirectory("graft_swap")
+    val dir = root.resolve("issues").toString
+    IngestJob.run(spark, "issues", Seq(fixture("issues_page_1.json")), dir)
+    IngestJob.run(spark, "issues",
+      Seq(fixture("issues_page_1.json"), fixture("issues_page_2.json")), dir)
+    assert(new java.io.File(root.toString).list().toSeq === Seq("issues"))
+  }
+
+  test("IngestJob write failure removes staging and keeps the previous table") {
+    import graft.etl.IngestJob
+    val root = java.nio.file.Files.createTempDirectory("graft_swap_fail")
+    val dir = root.resolve("worklogs").toString
+    val before = IngestJob.run(spark, "worklogs",
+      Seq(fixture("worklogs_page_1.json")), dir)
+    val rowsBefore = before.orderBy("tempo_worklog_id").collect().toSeq
+    val schemaBefore = before.schema
+    // start_date is cast to DATE on the executors; under ANSI a value
+    // that is not a date fails the write's task, not its planning
+    val bad = root.resolve("bad_date.json")
+    java.nio.file.Files.writeString(bad,
+      """{"results": [{"tempoWorklogId": 7, "startDate": "not-a-date"}],
+        | "metadata": {}}""".stripMargin)
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try intercept[Exception] {
+      IngestJob.run(spark, "worklogs", Seq(bad.toString), dir)
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert(new java.io.File(root.toString).list().sorted.toSeq ===
+      Seq("bad_date.json", "worklogs"))
+    val after = spark.read.parquet(dir)
+    assert(after.schema === schemaBefore)
+    assert(after.orderBy("tempo_worklog_id").collect().toSeq === rowsBefore)
+  }
+
   test("malformed page rows are quarantined, not fatal (PERMISSIVE corrupt column)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_bad")
     val f = dir.resolve("bad.json")

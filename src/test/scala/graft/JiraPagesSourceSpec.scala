@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.etl.{Flatten, JiraEtl}
+import graft.sources.jira.PageTransport
 
 /** DataSource V2 page source: parity with the schema'd JSON reader,
   * page-per-partition parallelism, column pruning pushed into the reader,
@@ -53,15 +54,26 @@ class JiraPagesSourceSpec extends SparkSpec {
       Seq(1L, 2L, 3L))
   }
 
+  /** Counts fetch attempts per page address through the fault-injection
+    * seam, then hands each attempt to `inject`, which may throw to fail it.
+    */
+  private def countAttempts(inject: (String, Int) => Unit = (_, _) => ())
+      : java.util.concurrent.ConcurrentHashMap[String, Integer] = {
+    val attempts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    PageTransport.faultInjector = (path, attempt) => {
+      attempts.merge(path, 1, (a, b) => a + b)
+      inject(path, attempt)
+    }
+    attempts
+  }
+
   test("transient page failures retry with backoff; committed pages are never re-read") {
-    import graft.sources.jira.PageTransport
-    PageTransport.resetForTest()
     try {
       val flaky = fixture("issues_page_2.json")
       // page 2 fails on its first two attempts, then recovers
-      PageTransport.faultInjector = (path, attempt) =>
+      val attempts = countAttempts((path, attempt) =>
         if (path == flaky && attempt <= 2)
-          throw new java.io.IOException(s"injected transient failure (attempt $attempt)")
+          throw new java.io.IOException(s"injected transient failure (attempt $attempt)"))
       val v2 = spark.read.format("graft-jira-pages")
         .option("entity", "issues")
         .option("mode", "cursor")
@@ -69,19 +81,17 @@ class JiraPagesSourceSpec extends SparkSpec {
         .option("retryBackoffMs", "1")
         .load(fixture("issues_page_1.json"), flaky)
       assert(v2.count() === 3, "the scan must complete through the transient failure")
-      assert(PageTransport.fetchAttempts.get(fixture("issues_page_1.json")) === 1,
+      assert(attempts.get(fixture("issues_page_1.json")) === 1,
         "the committed page must not be re-read on the later page's retries")
-      assert(PageTransport.fetchAttempts.get(flaky) === 3,
+      assert(attempts.get(flaky) === 3,
         "the flaky page retries exactly until it recovers")
     } finally PageTransport.resetForTest()
   }
 
   test("retries exhaust into a terminal failure (no infinite retry loop)") {
-    import graft.sources.jira.PageTransport
-    PageTransport.resetForTest()
     try {
-      PageTransport.faultInjector = (_, _) =>
-        throw new java.io.IOException("injected permanent failure")
+      val attempts = countAttempts((_, _) =>
+        throw new java.io.IOException("injected permanent failure"))
       val v2 = spark.read.format("graft-jira-pages")
         .option("entity", "issues")
         .option("retries", "2")
@@ -90,7 +100,7 @@ class JiraPagesSourceSpec extends SparkSpec {
       val e = intercept[org.apache.spark.SparkException](v2.count())
       assert(e.getMessage.contains("failed after 2 attempts") ||
         Option(e.getCause).exists(_.getMessage.contains("failed after 2 attempts")))
-      assert(PageTransport.fetchAttempts.get(fixture("issues_page_1.json")) >= 2)
+      assert(attempts.get(fixture("issues_page_1.json")) >= 2)
     } finally PageTransport.resetForTest()
   }
 
@@ -220,6 +230,7 @@ class JiraPagesSourceSpec extends SparkSpec {
     val route = "/issues?startAt=0"
     val srv = new LoopbackServer(Map(route -> fixtureBody("issues_page_1.json")),
       delayMs = Map(route -> 3000L))
+    val attempts = countAttempts()
     try {
       val df = spark.read.format("graft-jira-pages").option("entity", "issues")
         .option("retries", "2").option("retryBackoffMs", "1")
@@ -234,12 +245,11 @@ class JiraPagesSourceSpec extends SparkSpec {
         s"a stalled fetch must reach the bounded-retry path: $msgs")
       // the server's single-threaded dispatcher is still asleep, so count
       // attempts client-side: both went out, both timed out
-      assert(graft.sources.jira.PageTransport.fetchAttempts
-        .get(s"${srv.base}$route") === 2,
+      assert(attempts.get(s"${srv.base}$route") === 2,
         "the timeout must be retried like any IO failure")
       assert(elapsedMs >= 280, f"two 150 ms timeouts must elapse ($elapsedMs%.0f ms)")
       assert(elapsedMs < 2500, f"timeouts must bound the stall ($elapsedMs%.0f ms)")
-    } finally srv.stop()
+    } finally { srv.stop(); PageTransport.resetForTest() }
   }
 
   test("worklog chain ends on absent metadata AND on explicit null next (no error, no extra fetch)") {
